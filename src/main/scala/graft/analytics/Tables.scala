@@ -26,10 +26,10 @@ object Tables {
     * TimestampType column and oracle values agree either way.
     *
     * Requires `spark.sql.legacy.parquet.nanosAsLong=true` AT SESSION BUILD
-    * ([[graft.GraftSession]] and every entry point set it) for the NANOS
-    * layout — this loader deliberately does NOT mutate session conf: a table
-    * loader silently toggling a session-global legacy flag would change how
-    * every other NANOS parquet in the session reads.
+    * (GraftSession sets it) for the NANOS layout — this loader deliberately
+    * does NOT mutate session conf: a table loader silently toggling a
+    * session-global legacy flag would change how every other NANOS parquet
+    * in the session reads.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}

@@ -59,8 +59,8 @@ import org.apache.spark.sql.types._
   *
   * Scale notes: a manifest is O(segments) lines of text — compaction keeps
   * it short, and the coefficient is MEASURED (SCALE.md session-13,
-  * `tools/ManifestDecade`): at 10 000 live segments the manifest is
-  * ~2 MB, `current()` parses it in ~16 ms, planning stays flat (~40 ms,
+  * `artifacts/manifest_decade_r11.json`): at 10 000 live segments the
+  * manifest is ~2 MB, `current()` parses it in ~16 ms, planning stays flat (~40 ms,
   * zero data-tree FS calls with v5 recorded file lists) and commit
   * latency is dominated by the segment write, not the manifest rewrite —
   * flat is fine to 10⁴ segments, and [[maintain]]'s default
@@ -426,8 +426,12 @@ object ManifestStore {
         val tmpName = try
           scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
         finally in.close()
+        // the claim's owner writes the tmp name right after the exclusive
+        // create: an empty claim is that write in flight, not a dead claim
+        // (deleting it would reopen a slot its owner is installing)
+        if (tmpName.isEmpty) return
         val tmp = new Path(claim.getParent, tmpName)
-        if (tmpName.nonEmpty && fs.exists(tmp)) {
+        if (fs.exists(tmp)) {
           try fs.rename(tmp, target) catch { case _: java.io.IOException => () }
         } else if (!fs.exists(target)) {
           quietDelete(fs, claim) // dead claim: unwedge the version sequence

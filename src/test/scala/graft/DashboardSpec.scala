@@ -143,4 +143,22 @@ class DashboardSpec extends SparkSpec {
     assert(root.length == 1 && root(0).getString(0) == "<root>")
     assert(root(0).getLong(1) == 1L && root(0).getLong(2) > 0L)
   }
+
+  test("byDayName names day codes; an out-of-range code gets a null day_name") {
+    val dirty = gold.unionByName(gold.limit(1).withColumn("crash_day_of_week", lit(9)))
+    val r = Dashboard.byDayName(dirty).collect()
+      .map(x => (x.getInt(0), Option(x.getString(1)), x.getLong(2))).toSeq
+    assert(r == Seq((2, Some("Mon"), 1L), (3, Some("Tue"), 1L), (7, Some("Sat"), 2L), (9, None, 1L)))
+  }
+
+  test("topK orders by count, breaks ties by the dimension value and honours k") {
+    def top(g: DataFrame, dim: String, k: Int) =
+      Dashboard.topK(g, dim, k).collect().map(x => (x.get(0), x.getLong(1))).toSeq
+    // CLEAR and RAIN tie at 2: the dimension value decides
+    assert(top(gold, "weather_condition", 1) == Seq(("CLEAR", 2L)))
+    val moreRain = gold.unionByName(gold.where($"weather_condition" === "RAIN").limit(1))
+    assert(top(moreRain, "weather_condition", 5) == Seq(("RAIN", 3L), ("CLEAR", 2L)))
+    // four single-count limits: the three smallest, ascending
+    assert(top(gold, "posted_speed_limit", 3) == Seq((25, 1L), (30, 1L), (45, 1L)))
+  }
 }

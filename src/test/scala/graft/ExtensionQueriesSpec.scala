@@ -607,4 +607,24 @@ class ExtensionQueriesSpec extends SparkSpec {
       } finally spark.conf.unset("graft.broadcastPairBound")
     }
   }
+
+  test("x3_quality_lane: a null-text held-out document changes no tranche") {
+    // under ANSI (the Spark 4 default) size(NULL) is NULL, so a null-text
+    // doc gets a NULL `pass` and lands in neither the survivors nor the
+    // 'dropped' tranche — the oracle's explode-based CTE drops it too
+    import org.apache.spark.sql.functions.{lit, max}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val maxId = docs.agg(max("doc_id")).collect()(0).getLong(0)
+    val nullDoc = docs.limit(1)
+      .withColumn("doc_id", lit((maxId / 10 + 1) * 10 + 1)) // held out: id % 10 != 0
+      .withColumn("text", lit(null).cast("string"))
+    val (base, withNull) = (tmpDir("x3-base"), tmpDir("x3-null"))
+    docs.write.parquet(s"$base/documents.parquet")
+    docs.unionByName(nullDoc).write.parquet(s"$withNull/documents.parquet")
+    def run(dir: String): Seq[Row] =
+      Registry.byName("x3_quality_lane").fn(spark, dir).collect().toSeq
+    val expected = run(base)
+    assert(expected.nonEmpty)
+    assert(run(withNull) == expected)
+  }
 }

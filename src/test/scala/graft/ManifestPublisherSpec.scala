@@ -85,6 +85,20 @@ class ManifestPublisherSpec extends SparkSpec {
     racePublisher(Publisher.ExclusiveMarker, "Marker")
   }
 
+  test("ExclusiveMarker: a racer that reads a claim before its owner wrote it loses cleanly") {
+    // claim creation and its tmp-name write are two steps; a loser reading
+    // in between sees an EMPTY claim and must neither throw nor delete it
+    val dir = tmpDir("pubEmptyClaim")
+    val fs = fsFor(dir)
+    val target = new Path(dir, "v000000000001.manifest")
+    val claim = new Path(dir, "v000000000001.claim")
+    write(fs, claim, "")
+    val tmp = new Path(dir, ".tmp-late"); write(fs, tmp, "commit-late")
+    assert(!Publisher.ExclusiveMarker.publish(fs, tmp, target), "the slot is claimed")
+    assert(fs.exists(claim), "the owner's in-flight claim must survive")
+    assert(!fs.exists(target) && !fs.exists(tmp))
+  }
+
   test("ExclusiveMarker crash window: a claim without its manifest is completed by the next reader") {
     ManifestStore.publisherOverride = Some(Publisher.ExclusiveMarker)
     try {
