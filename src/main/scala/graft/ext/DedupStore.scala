@@ -114,19 +114,15 @@ object DedupStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Crash-recovery sweep for [[compact]]'s rename-aside swap: if a kill
-    * landed between the two renames, a `*_old` backup exists while the live
-    * directory is missing — restore it. Called on every probe and compact,
-    * so a restarted stream self-heals before reading.
+  /** Crash recovery for [[compact]]'s swap ([[graft.ops.FsCommit.recoverSwap]]
+    * on each side). Called on every probe and compact, so a restarted stream
+    * self-heals before reading.
     */
   private def recover(spark: SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("bands", "shingles").foreach { side =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/$side")
-      val bak = new org.apache.hadoop.fs.Path(s"$path/${side}_old")
-      if (!fs.exists(d) && fs.exists(bak)) fs.rename(bak, d)
-    }
+    Seq("bands", "shingles").foreach(side =>
+      graft.ops.FsCommit.recoverSwap(fs, new org.apache.hadoop.fs.Path(s"$path/$side")))
   }
 
   /** Append a batch's signatures (callers pass only docs accepted as novel).
@@ -150,32 +146,14 @@ object DedupStore {
     * Also collapses exact-duplicate rows a crash-replay may have accreted
     * (harmless for correctness, pure IO waste). Runs under the store's
     * single-writer assumption — call it from the ingest owner between
-    * batches; the delete-and-rename swap is not safe against a concurrent
-    * probe.
+    * batches; the rename-aside swap ([[graft.ops.FsCommit.swapIn]]) is not
+    * safe against a concurrent probe.
     */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 8): Unit = {
     recover(spark, path)
     if (!exists(spark, s"$path/bands")) return
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // rename-aside, rename-in, then delete the backup: a crash at any point
-    // leaves either the old or the new data reachable after the [[recover]]
-    // sweep — never a window where the live directory is missing
-    // (delete-then-rename would brick the store on a kill between the two).
-    def swap(tmp: String, dst: String): Unit = {
-      val t = new org.apache.hadoop.fs.Path(tmp)
-      val d = new org.apache.hadoop.fs.Path(dst)
-      val bak = new org.apache.hadoop.fs.Path(dst + "_old")
-      fs.delete(bak, true)
-      if (fs.exists(d) && !fs.rename(d, bak))
-        throw new java.io.IOException(s"compact: rename $dst -> $bak failed")
-      if (!fs.rename(t, d)) {
-        // restore the original rather than leaving the store headless
-        fs.rename(bak, d)
-        throw new java.io.IOException(s"compact: rename $tmp -> $dst failed")
-      }
-      fs.delete(bak, true)
-    }
     // hash-repartition on band: each band value lands in exactly one task, so
     // the partitioned write emits one file per band directory
     readStore(spark, path, "bands", bandSchema, Set("band")).distinct()
@@ -184,8 +162,9 @@ object DedupStore {
     readStore(spark, path, "shingles", shingleSchema).distinct()
       .repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/.shingles_compact")
-    swap(s"$path/.shingles_compact", s"$path/shingles")
-    swap(s"$path/.bands_compact", s"$path/bands")
+    Seq("shingles", "bands").foreach(side => graft.ops.FsCommit.swapIn(fs,
+      new org.apache.hadoop.fs.Path(s"$path/.${side}_compact"),
+      new org.apache.hadoop.fs.Path(s"$path/$side")))
   }
 
   /** Map each incoming doc to the accepted doc it duplicates:

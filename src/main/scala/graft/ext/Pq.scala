@@ -327,7 +327,6 @@ object Pq {
   def consolidateIndex(spark: SparkSession, indexPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Long, Long) =
     graft.ops.ScaleOps.compactParquet(spark, indexPath, targetFileBytes,
-      partitionBy = Seq("batch", "cell"),
       transform = df => df.select(col("id"), col("codes"),
         lit(-1).as("batch"), col("cell")))
 

@@ -13,33 +13,34 @@ import graft.silver.Transformer
   * keys + append — semantically identical under the reference's own
   * single-writer assumption (one cleaner consumer, prefetch 1;
   * cleaner/cleaner.py:248). Replays of the same batch are no-ops, which is
-  * what makes the at-least-once delivery safe (ST4).
+  * what makes the at-least-once delivery safe (ST4). Gold has ONE layout:
+  * parquet partitioned by a key bucket ([[upsertBucketed]]).
   *
   * WRITER CONCURRENCY (the contract, stated once and permanently): plain
-  * [[upsert]]/[[upsertBucketed]] are SINGLE-WRITER per table path — the
-  * conflict check (anti join) and the append are two steps, so two
-  * uncoordinated writers racing the same keys can both observe "absent" and
-  * both insert (GoldWriterSpec pins the serialized interleaving that
-  * prevents this). That matches the reference deployment exactly (its
-  * PK-enforced DuckDB writer sits behind a prefetch-1 queue consumer — one
-  * writer by construction). Deployments that DO need concurrent upserts use
-  * [[lockedUpsert]]/[[lockedUpsertBucketed]]: an advisory filesystem mutex
-  * (atomic exclusive-create of `_graft_gold.lock`, stale-takeover on crash)
-  * serializes cooperating writers on filesystems with atomic
-  * create-no-overwrite (local, HDFS). Object stores without atomic
-  * exclusive-create need an external coordinator (or a transactional table
-  * format) — that is a storage-layer property no parquet-directory protocol
-  * can conjure, and pretending otherwise would be the bug. The engine's
-  * transactional answer is [[graft.ops.ManifestStore]]: manifest-resolved
-  * tables get lock-free first-write-wins upserts (optimistic CAS publish)
-  * and crash-atomic rewrites — use it when the table is born under this
-  * engine; the path-based writers here remain for plain parquet layouts
-  * any external reader can scan directly.
+  * [[upsertBucketed]] is SINGLE-WRITER per table path — the conflict check
+  * (anti join) and the append are two steps, so two uncoordinated writers
+  * racing the same keys can both observe "absent" and both insert. That
+  * matches the reference deployment exactly (its PK-enforced DuckDB writer
+  * sits behind a prefetch-1 queue consumer — one writer by construction).
+  * Deployments that DO need concurrent upserts use [[lockedUpsertBucketed]]:
+  * an advisory filesystem mutex (atomic exclusive-create of
+  * `_graft_gold.lock`, stale-takeover on crash) serializes cooperating
+  * writers on filesystems with atomic create-no-overwrite (local, HDFS).
+  * Object stores without atomic exclusive-create need an external
+  * coordinator (or a transactional table format) — that is a storage-layer
+  * property no parquet-directory protocol can conjure, and pretending
+  * otherwise would be the bug. The engine's transactional answer is
+  * [[graft.ops.ManifestStore]]: manifest-resolved tables get lock-free
+  * first-write-wins upserts (optimistic CAS publish) and crash-atomic
+  * rewrites — use it when the table is born under this engine; the
+  * path-based writer here remains for a plain parquet layout any external
+  * reader can scan directly.
   *
-  * Scale: the anti join ships only the key column of the existing table
-  * (Catalyst prunes to one column) and the incoming batch is tiny relative to
-  * the table, so AQE plans it as a broadcast of the batch keys — no full-table
-  * shuffle per upsert.
+  * Scale: the anti join ships only the key column of the touched buckets
+  * (Catalyst prunes to one column, the file index to the touched partition
+  * directories) and the incoming batch is tiny relative to the table, so
+  * AQE plans it as a broadcast of the batch keys — no full-table shuffle
+  * per upsert.
   */
 object GoldWriter {
 
@@ -49,34 +50,6 @@ object GoldWriter {
       nullKeys: Long,
       insertedRows: Long)
 
-  /** Dedup the incoming batch (deterministic keep-first by full-row order),
-    * skip keys already present, append the rest.
-    */
-  def upsert(spark: SparkSession, batch: DataFrame, path: String,
-      key: String = "crash_record_id"): IntegrityReport = {
-    val tiebreak = batch.columns.filter(_ != key).sorted.map(col).toSeq
-    val deduped = Transformer.dedupKeepFirst(batch.where(col(key).isNotNull), key, tiebreak)
-
-    val exists = tableExists(spark, path)
-    if (exists) requireLayout(spark, path, bucketed = false)
-    val toInsert =
-      if (exists) {
-        val existingKeys = spark.read.parquet(path).select(key)
-        deduped.join(existingKeys, Seq(key), "left_anti")
-      } else deduped
-
-    // Materialize the insert count before appending (the plan reads `path`).
-    val inserted = toInsert.cache()
-    val nInserted = inserted.count()
-    if (nInserted > 0) inserted.write.mode(SaveMode.Append).parquet(path)
-    inserted.unpersist()
-
-    // A first batch can legitimately insert nothing (every key null); the
-    // table then still doesn't exist and the report scan would throw.
-    if (!exists && nInserted == 0L) IntegrityReport(0L, 0L, 0L, 0L)
-    else integrityCheck(spark, path, key, nInserted)
-  }
-
   /** The partition column of the bucketed Gold layout. Derived from the KEY
     * (not an attribute like crash_date), so a given key can only ever live in
     * one partition directory — which is what makes pruning the conflict scan
@@ -84,14 +57,14 @@ object GoldWriter {
     */
   val bucketCol = "__key_bucket"
 
-  /** Scale path for a growing Gold table ([[upsert]]'s existing-keys scan
-    * reads the full key column per micro-batch — the streaming loop's scale
-    * ceiling once Gold reaches 100 TB). Gold is laid out as parquet
+  /** Dedup the incoming batch (deterministic keep-first by full-row order),
+    * skip keys already present, append the rest. Gold is laid out as parquet
     * partitioned by `__key_bucket = pmod(xxhash64(key), buckets)`; each batch
     * anti-joins only against the bucket directories its own keys hash to, so
     * per-batch conflict-scan IO is `(touched buckets / buckets) * table`,
-    * independent of total table size for small batches. Same first-write-wins
-    * semantics as [[upsert]] (reference: cleaner/duckdb_writer.py:141-207).
+    * independent of total table size for small batches — a flat layout's
+    * full key-column scan per micro-batch would be the streaming loop's
+    * scale ceiling (reference: cleaner/duckdb_writer.py:141-207).
     *
     * Integrity (A13/A14) is likewise scoped to the touched buckets: a
     * duplicate or null this batch could introduce necessarily lives in a
@@ -109,7 +82,7 @@ object GoldWriter {
     val touched = deduped.select(bucketCol).distinct().collect().map(_.getInt(0)).toSeq
 
     val exists = tableExists(spark, path)
-    if (exists) requireLayout(spark, path, bucketed = true)
+    if (exists) requireBucketed(spark, path)
     val toInsert =
       if (exists)
         deduped.join(existingKeysScan(spark, path, key, touched), Seq(key), "left_anti")
@@ -152,42 +125,35 @@ object GoldWriter {
       .where(col(bucketCol).isin(touched: _*))
       .select(key)
 
-  /** Fail fast when an upsert targets a table written by the other layout:
-    * a flat append onto a bucketed table (or vice versa) would silently break
-    * the pruning invariant (a key could then live outside its bucket
+  /** Fail fast when the path holds a flat (unbucketed) parquet table written
+    * outside this program: appending bucket directories beside it would
+    * break the pruning invariant (a key could then live outside its bucket
     * directory, and the pruned conflict scan would miss it — duplicate keys
     * with no error). Layout is decided by the presence of the
     * `__key_bucket=N` partition directories, a listing-only probe.
     */
-  private def requireLayout(spark: SparkSession, path: String, bucketed: Boolean): Unit = {
+  private def requireBucketed(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isBucketed = fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol="))
-    if (isBucketed != bucketed) {
-      val (found, wanted) =
-        if (isBucketed) ("bucketed (__key_bucket=N partitions)", "upsertBucketed")
-        else ("flat", "upsert")
+    if (!fs.listStatus(p).exists(s =>
+        s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol=")))
       throw new IllegalStateException(
-        s"Gold table at $path has a $found layout; use GoldWriter.$wanted " +
-          "for this table (mixing layouts on one path breaks the bucket-pruned " +
-          "conflict scan and can admit duplicate keys).")
-    }
+        s"Gold table at $path has a flat layout; GoldWriter.upsertBucketed " +
+          "needs the bucketed (__key_bucket=N partitions) layout (mixing " +
+          "layouts on one path breaks the bucket-pruned conflict scan and " +
+          "can admit duplicate keys).")
   }
 
-  /** The advisory writer mutex behind [[lockedUpsert]]: acquire via
+  /** The advisory writer mutex behind [[lockedUpsertBucketed]]: acquire via
     * exclusive-create of `<path parent>/<name>.lock`, run the body, release
-    * in finally. Exclusive-create is atomic on HDFS and on `file://` here
-    * (local paths go through `java.nio` `CREATE_NEW`, an O_EXCL open —
-    * Hadoop's own RawLocalFileSystem implements `create(overwrite=false)`
-    * as a NON-atomic exists-then-create, so it is only the fallback for
-    * other schemes; on S3-like stores with no atomic create this lock is
-    * advisory-best-effort and the idempotent-upsert argument below is the
-    * real safety net). A lock older than `staleMs` is presumed abandoned by
-    * a crashed writer and is broken (rename-aside + retry) — safe because
-    * upserts are idempotent first-write-wins appends: the worst a
-    * broken-then-raced stale writer can do is append rows a replay would
-    * have appended anyway... except duplicates, which is exactly why
+    * in finally. Exclusive-create ([[graft.ops.FsCommit.createExclusive]])
+    * is atomic on HDFS and on `file://`; on S3-like stores with no atomic
+    * create this lock is advisory-best-effort and the idempotent-upsert
+    * argument below is the real safety net. A lock older than `staleMs` is
+    * presumed abandoned by a crashed writer and is broken (rename-aside +
+    * retry) — safe because upserts are idempotent first-write-wins appends:
+    * the worst a broken-then-raced stale writer can do is append rows a
+    * replay would have appended anyway... except duplicates, which is why
     * `staleMs` should exceed any plausible upsert duration (default 10 min).
     * Each acquisition writes a per-acquisition UUID into the lock file and
     * the finally-release deletes ONLY if the content still matches: a
@@ -206,38 +172,10 @@ object GoldWriter {
       table.getParent, s".${table.getName}._graft_gold.lock")
     val token = java.util.UUID.randomUUID().toString
     val tokenBytes = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val isLocal = {
-      val s = lock.toUri.getScheme
-      s == null || s == "file"
-    }
-    // java.nio CREATE_NEW (unlike fs.create) does NOT create missing parent
-    // directories, and its NoSuchFileException would be indistinguishable
-    // from "lock held" below — the very first upsert into a fresh table
-    // root would spin for the full waitMs. Make the parent exist up front.
-    if (isLocal) {
-      val parent = java.nio.file.Paths.get(lock.toUri.getPath).getParent
-      if (parent != null)
-        try java.nio.file.Files.createDirectories(parent)
-        catch { case _: java.io.IOException => () }
-    }
-    def tryCreate(): Boolean =
-      if (isLocal) {
-        // O_EXCL create — atomic on a local filesystem, unlike
-        // RawLocalFileSystem's exists-then-create
-        val p = java.nio.file.Paths.get(lock.toUri.getPath)
-        try {
-          java.nio.file.Files.write(p, tokenBytes,
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          true
-        } catch { case _: java.io.IOException => false }
-      } else {
-        try {
-          val out = fs.create(lock, false)
-          out.write(tokenBytes); out.close()
-          true
-        } catch { case _: java.io.IOException => false }
-      }
+    // the local O_EXCL create does NOT create missing parent directories,
+    // and that failure would read as "lock held" below — the very first
+    // upsert into a fresh table root would spin for the full waitMs
+    try fs.mkdirs(lock.getParent) catch { case _: java.io.IOException => () }
     def lockContent(): Option[String] =
       try {
         val in = fs.open(lock)
@@ -252,7 +190,7 @@ object GoldWriter {
     val deadline = System.currentTimeMillis() + waitMs
     var held = false
     while (!held) {
-      if (tryCreate()) held = true
+      if (graft.ops.FsCommit.createExclusive(fs, lock, tokenBytes)) held = true
       else {
         val age = try System.currentTimeMillis() -
           fs.getFileStatus(lock).getModificationTime
@@ -283,16 +221,11 @@ object GoldWriter {
     }
   }
 
-  /** [[upsert]] serialized through [[withTableLock]] — the multi-writer
-    * entry: concurrent cooperating writers upserting overlapping keys get
-    * first-write-wins with zero duplicate keys (GoldWriterSpec pins the
-    * contended interleaving).
+  /** [[upsertBucketed]] serialized through [[withTableLock]] — the
+    * multi-writer entry: concurrent cooperating writers upserting
+    * overlapping keys get first-write-wins with zero duplicate keys
+    * (GoldWriterSpec pins the contended interleaving).
     */
-  def lockedUpsert(spark: SparkSession, batch: DataFrame, path: String,
-      key: String = "crash_record_id"): IntegrityReport =
-    withTableLock(spark, path)(upsert(spark, batch, path, key))
-
-  /** [[upsertBucketed]] under the same advisory writer mutex. */
   def lockedUpsertBucketed(spark: SparkSession, batch: DataFrame, path: String,
       key: String = "crash_record_id", buckets: Int = 64): IntegrityReport =
     withTableLock(spark, path)(upsertBucketed(spark, batch, path, key, buckets))

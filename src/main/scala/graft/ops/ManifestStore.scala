@@ -7,13 +7,13 @@ import org.apache.spark.sql.types._
 
 /** Atomic-commit parquet table: write-new-files, then atomically publish a
   * MANIFEST listing the table's live segments; readers resolve every scan
-  * through the latest manifest. This is the unification the maintenance
-  * family previously approximated one-off — [[graft.gold.GoldWriter]]'s
-  * check-then-append window, [[ScaleOps.compactParquet]] /
-  * [[ScaleOps.deleteKeys]]' rename-aside swaps, and the advisory writer
-  * lock each defended their own crash window; here ONE protocol covers all
-  * of them (the mini table-format discipline of Delta/Iceberg commit logs,
-  * re-derived for this engine's needs):
+  * through the latest manifest. The path-based writers each defend their
+  * own crash window — [[graft.gold.GoldWriter.upsertBucketed]]'s
+  * check-then-append behind the advisory `withTableLock`, and the
+  * [[FsCommit]] rename-aside swap behind [[ScaleOps.compactParquet]] /
+  * [[ScaleOps.deleteKeys]]; here ONE protocol covers all of them (the mini
+  * table-format discipline of Delta/Iceberg commit logs, re-derived for
+  * this engine's needs):
   *
   *  - **Crash atomicity**: data files land under fresh UUID segment
   *    directories that no manifest references yet; the commit is a single
@@ -350,36 +350,11 @@ object ManifestStore {
       * code, not an implied rename assumption.
       */
     case object ExclusiveMarker extends Publisher {
-      /** The protocol's one requirement: claim creation must be ATOMIC
-        * create-if-absent. Hadoop's RawLocalFileSystem implements
-        * `create(overwrite = false)` as a non-atomic exists-then-create,
-        * so on `file://` the claim goes through java.nio CREATE_NEW
-        * (O_EXCL) — the GoldWriter lock idiom; other schemes use the
-        * filesystem's own exclusive create.
-        */
-      private def claimExclusive(fs: FileSystem, claim: Path, tmpName: String): Boolean = {
-        val bytes = tmpName.getBytes(Utf8)
-        val scheme = Option(fs.getUri.getScheme).getOrElse("file")
-        if (scheme == "file") {
-          try {
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(claim.toUri.getPath), bytes,
-              java.nio.file.StandardOpenOption.CREATE_NEW,
-              java.nio.file.StandardOpenOption.WRITE)
-            true
-          } catch { case _: java.io.IOException => false }
-        } else {
-          try {
-            val out = fs.create(claim, false)
-            try out.write(bytes) finally out.close()
-            true
-          } catch { case _: java.io.IOException => false }
-        }
-      }
-
       def publish(fs: FileSystem, tmp: Path, target: Path): Boolean = {
         val claim = claimOf(target)
-        val claimed = claimExclusive(fs, claim, tmp.getName)
+        // the protocol's one requirement: claim creation is ATOMIC
+        // create-if-absent (O_EXCL on file://, see FsCommit)
+        val claimed = FsCommit.createExclusive(fs, claim, tmp.getName.getBytes(Utf8))
         if (!claimed) {
           // a racer owns the slot; help a crashed winner finish, then lose
           completeClaim(fs, claim, target)

@@ -1109,10 +1109,9 @@ object ScaleOps {
     * few files per micro-batch; a year of 5-minute ticks is ~10^5 files
     * whose listing/open overhead dominates scan cost long before data size
     * does. Rewrites the tree to ~`targetFileBytes`-sized files (per
-    * partition directory when `partitionBy` is given, preserving
-    * partition-pruning layout), validates the rewrite by row count, then
-    * swaps rename-aside — a crash at any point leaves the old or the new
-    * layout reachable, never a mix and never a missing directory.
+    * partition directory of the table's discovered partition columns,
+    * preserving the partition-pruning layout), validates the rewrite by row
+    * count, then publishes it with [[FsCommit.swapIn]].
     *
     * `transform` (default identity) rewrites the table body before the
     * compaction — e.g. dropping a replay-key partition column when folding
@@ -1123,13 +1122,11 @@ object ScaleOps {
     * with the original untouched instead of validating against its own
     * output and silently losing data.
     *
-    * SINGLE-WRITER, NO CONCURRENT READERS: the publish swap has an
-    * unavoidable window between `rename(root, bak)` and `rename(tmp, root)`
-    * where the live directory does not exist — a query racing the swap
-    * fails transiently with path-not-found (crash recovery restores the
-    * backup, so no data is ever lost, but the reader sees the gap). Callers
-    * own the exclusion: streaming stores compact only while the stream is
-    * STOPPED ([[graft.streaming.Incremental]] documents the contract), and
+    * SINGLE-WRITER, NO CONCURRENT READERS: the swap has a window where the
+    * live directory does not exist ([[FsCommit]]) — a query racing it fails
+    * transiently with path-not-found. Callers own the exclusion: streaming
+    * stores compact only while the stream is STOPPED
+    * ([[graft.streaming.Incremental]] documents the contract), and
     * probe/query paths must not race a compaction.
     * [[ManifestStore.compact]] is the no-gap alternative for
     * manifest-resolved tables: readers keep their snapshot through the
@@ -1139,81 +1136,39 @@ object ScaleOps {
     */
   def compactParquet(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      partitionBy: Seq[String] = Nil,
       transform: DataFrame => DataFrame = identity): (Long, Long) = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact_old")
-    // Crash recovery BEFORE any cleanup (the DedupStore.recover discipline):
-    // a kill between the two publish renames leaves the live dir missing and
-    // the data only in the backup — restore it first; deleting the backup
-    // unconditionally here would destroy the only surviving copy.
-    if (!fs.exists(root) && fs.exists(bak) && !fs.rename(bak, root))
-      throw new java.io.IOException(
-        s"compactParquet: restore of crashed swap $bak -> $path failed")
-    // Remaining leftovers: tmp is unpublished by definition (the swap below
-    // is the only publisher) — drop it; a backup alongside a LIVE dir means
-    // the previous swap completed, so the live dir is authoritative.
-    fs.delete(tmp, true)
-    fs.delete(bak, true)
-
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) buf += f
-      }
-      buf.toSeq
+    var filesBefore = 0L
+    rewriteInPlace(spark, path, "compactParquet") { (raw, parts) =>
+      val before = parquetFileSizes(spark, path)
+      filesBefore = before.size.toLong
+      val totalBytes = before.sum
+      val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
+      // expected = the RAW table's count, taken before `transform` runs — the
+      // validation must not be self-referential (a dropping transform counted
+      // on its own output would always "pass")
+      val expected = raw.count()
+      val df = transform(raw)
+      val out =
+        if (parts.nonEmpty) {
+          // Honor the size target INSIDE each partition directory too: hashing
+          // on the partition columns alone would fold every row of a hot
+          // partition value into one task and one arbitrarily large file. A
+          // content-hash salt bounded by ceil(nFiles / nDirs) splits each
+          // directory into ~target-sized slices while still co-locating each
+          // (dir, slice) in one task.
+          val nDirs = math.max(1L, df.select(parts.map(col): _*).distinct().count())
+          val perDir = math.max(1, math.ceil(nFiles.toDouble / nDirs).toInt)
+          val salted = df.withColumn("__compact_salt",
+            pmod(xxhash64(struct(df.columns.map(col): _*)), lit(perDir)))
+          salted
+            .repartition(nFiles, (parts.map(col) :+ col("__compact_salt")): _*)
+            .drop("__compact_salt")
+        } else df.repartition(nFiles)
+      (out, expected, "(either the rewrite lost rows or the caller's transform is not " +
+        "row-count-preserving)")
     }
-    val before = parquetFiles(root)
-    val totalBytes = before.map(_.getLen).sum
-    val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-
-    // expected = the RAW table's count, taken before `transform` runs — the
-    // validation must not be self-referential (a dropping transform counted
-    // on its own output would always "pass")
-    val raw = spark.read.parquet(path)
-    val expected = raw.count()
-    val df = transform(raw)
-    val writer =
-      (if (partitionBy.nonEmpty) {
-        // Honor the size target INSIDE each partition directory too: hashing
-        // on the partition columns alone would fold every row of a hot
-        // partition value into one task and one arbitrarily large file. A
-        // content-hash salt bounded by ceil(nFiles / nDirs) splits each
-        // directory into ~target-sized slices while still co-locating each
-        // (dir, slice) in one task.
-        val nDirs = math.max(1L, df.select(partitionBy.map(col): _*).distinct().count())
-        val perDir = math.max(1, math.ceil(nFiles.toDouble / nDirs).toInt)
-        val salted = df.withColumn("__compact_salt",
-          pmod(xxhash64(struct(df.columns.map(col): _*)), lit(perDir)))
-        salted
-          .repartition(nFiles, (partitionBy.map(col) :+ col("__compact_salt")): _*)
-          .drop("__compact_salt")
-      } else df.repartition(nFiles))
-        .write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(tmp.toString)
-    val got = spark.read.parquet(tmp.toString).count()
-    if (got != expected) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"compactParquet: rewrite of $path has $got rows, expected $expected " +
-          "(either the rewrite lost rows or the caller's transform is not " +
-          "row-count-preserving) — aborted, original untouched")
-    }
-    if (!fs.rename(root, bak))
-      throw new java.io.IOException(s"compactParquet: rename $path aside failed")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(bak, root) // restore rather than leaving the table headless
-      throw new java.io.IOException(s"compactParquet: publish of compacted $path failed")
-    }
-    fs.delete(bak, true)
-    (before.size.toLong, parquetFiles(root).size.toLong)
+    (filesBefore, parquetFileSizes(spark, path).size.toLong)
   }
 
   /** Targeted key deletion from a parquet store — the "right to be
@@ -1221,12 +1176,12 @@ object ScaleOps {
     * users. The complement of [[compactParquet]]'s row-preserving contract:
     * here the EXPECTED row delta is computed up front (raw count minus the
     * store's exact key-match count, via a left-semi join on the key
-    * column), the anti-join rewrite lands in a `.compact_tmp` sibling, and
-    * the swap publishes only if the rewrite's count equals that
-    * pre-computed expectation — a rewrite that lost or kept the wrong rows
-    * aborts with the original untouched. Same rename-aside tmp/bak
-    * protocol and suffixes as [[compactParquet]], so a crash at any point
-    * is recovered by either method's next invocation.
+    * column), and the anti-join rewrite publishes only if its count equals
+    * that pre-computed expectation — a rewrite that lost or kept the wrong
+    * rows aborts with the original untouched. Same rewrite-and-swap
+    * protocol as [[compactParquet]], so a crash at any point is recovered
+    * by either method's next invocation, and the table keeps its partition
+    * layout (a bucketed Gold table stays bucketed).
     *
     * `keys` co-partitions against the store on the key column (broadcast
     * when small — Catalyst's choice); the rewrite is one scan + one
@@ -1239,39 +1194,56 @@ object ScaleOps {
   def deleteKeys(spark: SparkSession, path: String, keyCol: String,
       keys: DataFrame): (Long, Long) = {
     require(keys.columns.contains(keyCol), s"keys frame must carry '$keyCol'")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact_old")
-    if (!fs.exists(root) && fs.exists(bak) && !fs.rename(bak, root))
-      throw new java.io.IOException(
-        s"deleteKeys: restore of crashed swap $bak -> $path failed")
-    fs.delete(tmp, true)
-    fs.delete(bak, true)
+    var hits = 0L
+    val remaining = rewriteInPlace(spark, path, "deleteKeys") { (raw, _) =>
+      val ks = keys.select(col(keyCol)).distinct().localCheckpoint(eager = true)
+      val total = raw.count()
+      hits = raw.join(ks, Seq(keyCol), "left_semi").count()
+      (raw.join(ks, Seq(keyCol), "left_anti"), total - hits,
+        s"($total total - $hits key matches)")
+    }
+    (hits, remaining)
+  }
 
+  /** The rewrite protocol [[compactParquet]] and [[deleteKeys]] share:
+    * recover a crashed swap, drop a stranded `.compact_tmp` sibling (it is
+    * unpublished by definition — the swap is its only publisher), write
+    * `rewrite(table, partition columns)` there with the table's discovered
+    * partition layout, and publish it with [[FsCommit.swapIn]] only if its
+    * row count equals the rewrite's expectation. Returns that row count.
+    */
+  private def rewriteInPlace(spark: SparkSession, path: String, verb: String)(
+      rewrite: (DataFrame, Seq[String]) => (DataFrame, Long, String)): Long = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
+    FsCommit.recoverSwap(fs, root)
+    fs.delete(tmp, true)
     val raw = spark.read.parquet(path)
-    val ks = keys.select(col(keyCol)).distinct().localCheckpoint(eager = true)
-    val total = raw.count()
-    val hits = raw.join(ks, Seq(keyCol), "left_semi").count()
-    val expected = total - hits
-    raw.join(ks, Seq(keyCol), "left_anti")
-      .write.mode("overwrite").parquet(tmp.toString)
+    val parts = raw.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.partitionSchema.fieldNames.toSeq
+    }.getOrElse(Nil)
+    val (out, expected, why) = rewrite(raw, parts)
+    out.write.mode("overwrite").partitionBy(parts: _*).parquet(tmp.toString)
     val got = spark.read.parquet(tmp.toString).count()
     if (got != expected) {
       fs.delete(tmp, true)
       throw new java.io.IOException(
-        s"deleteKeys: rewrite of $path has $got rows, expected $expected " +
-          s"($total total - $hits key matches) — aborted, original untouched")
+        s"$verb: rewrite of $path has $got rows, expected $expected $why " +
+          "— aborted, original untouched")
     }
-    if (!fs.rename(root, bak))
-      throw new java.io.IOException(s"deleteKeys: rename $path aside failed")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(bak, root)
-      throw new java.io.IOException(s"deleteKeys: publish of rewritten $path failed")
-    }
-    fs.delete(bak, true)
-    (hits, expected)
+    FsCommit.swapIn(fs, tmp, root)
+    got
+  }
+
+  private def parquetFileSizes(spark: SparkSession, path: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getLen).toSeq
   }
 
   // ------------------------------------------------------------------------

@@ -73,6 +73,26 @@ class DedupStoreSpec extends SparkSpec {
     assert(r.accepted == 0 && r.storeDups == 1)
   }
 
+  test("probe restores a store whose compact swap was killed between its two renames") {
+    val path = tmpDir("dstore-crash") + "/store"
+    DedupStore.ingestBatch(spark, Seq((1L, baseText)).toDF("doc_id", "text"), path)
+    val sig = MinHash.signatures(
+      Seq((4L, baseText + " tail")).toDF("doc_id", "text"), Seq("doc_id"))
+    def dups(): Seq[(Long, Long)] =
+      DedupStore.probe(spark, sig, path).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val before = dups()
+    assert(before == Seq((4L, 1L)), s"doc 4 must duplicate doc 1: $before")
+
+    // the state a kill after rename-aside and before rename-in leaves
+    val bands = new org.apache.hadoop.fs.Path(s"$path/bands")
+    val fs = bands.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(bands, graft.ops.FsCommit.backupOf(bands)))
+    assert(!fs.exists(bands))
+
+    assert(dups() == before, "the next probe must restore the backup and answer the same")
+    assert(fs.exists(bands) && !fs.exists(graft.ops.FsCommit.backupOf(bands)))
+  }
+
   test("an alien file in the store fails store-shaped, eagerly, naming the directory") {
     val path = tmpDir("dstore-alien") + "/store"
     val docs = Seq((1L, baseText)).toDF("doc_id", "text")

@@ -295,8 +295,8 @@ class ScaleOpsSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a kill between rename(root, bak) and rename(tmp, root): the
     // live dir is gone, the data survives only in the backup, tmp is partial
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".compact_old")))
+    val live = new org.apache.hadoop.fs.Path(dir)
+    assert(fs.rename(live, graft.ops.FsCommit.backupOf(live)))
     (1 to 3).map(i => (-i.toLong, "partial")).toDF("k", "v")
       .write.parquet(dir + ".compact_tmp")
     val (_, na) = ScaleOps.compactParquet(spark, dir, targetFileBytes = 1L << 30)
@@ -322,7 +322,7 @@ class ScaleOpsSpec extends SparkSpec {
       s
     }
     // target ~ total/6 -> nFiles ~ 6 over 3 dirs -> 2 salt slices per dir
-    ScaleOps.compactParquet(spark, dir, targetFileBytes = total / 6, partitionBy = Seq("p"))
+    ScaleOps.compactParquet(spark, dir, targetFileBytes = total / 6)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hot = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/p=0"))
@@ -336,8 +336,7 @@ class ScaleOpsSpec extends SparkSpec {
     val df = (1 to 900).map(i => (i.toLong, i % 3, s"v$i")).toDF("k", "p", "v")
     df.repartition(12).write.partitionBy("p").parquet(dir)
     val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val (nb, na) = ScaleOps.compactParquet(spark, dir,
-      targetFileBytes = 1L << 30, partitionBy = Seq("p"))
+    val (nb, na) = ScaleOps.compactParquet(spark, dir, targetFileBytes = 1L << 30)
     assert(nb > 3 && na == 3, s"one file per partition dir expected: $nb -> $na")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -752,10 +751,38 @@ class ScaleOpsSpec extends SparkSpec {
     // aside, replacement never landed
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".compact_old")))
+    val live = new org.apache.hadoop.fs.Path(dir)
+    assert(fs.rename(live, graft.ops.FsCommit.backupOf(live)))
     val (deleted, remaining) = ScaleOps.deleteKeys(spark, dir, "k", Seq(1L, 2L).toDF("k"))
     assert(deleted == 2 && remaining == 98, s"($deleted, $remaining)")
     assert(spark.read.parquet(dir).count() == 98)
+  }
+
+  test("deleteKeys keeps a partitioned table partitioned (a bucketed Gold table stays upsertable)") {
+    import spark.implicits._
+    import graft.gold.GoldWriter
+    val dir = tmpDir("delpart") + "/gold"
+    val rows = (1 to 200).map(i => (s"c$i", i))
+    rows.toDF("crash_record_id", "v")
+      .withColumn(GoldWriter.bucketCol,
+        pmod(xxhash64(col("crash_record_id")), lit(8L)).cast("int"))
+      .write.partitionBy(GoldWriter.bucketCol).parquet(dir)
+    val bucketDirs = (0 until 8).map(b => s"$dir/${GoldWriter.bucketCol}=$b")
+      .filter(d => new java.io.File(d).isDirectory)
+    assert(bucketDirs.size > 1, "the seed must span several bucket directories")
+
+    val (deleted, remaining) =
+      ScaleOps.deleteKeys(spark, dir, "crash_record_id", Seq("c1", "c2").toDF("crash_record_id"))
+    assert(deleted == 2 && remaining == 198, s"($deleted, $remaining)")
+    bucketDirs.foreach(d =>
+      assert(new java.io.File(d).isDirectory, s"bucket directory $d must survive deleteKeys"))
+    assert(!new java.io.File(dir).listFiles().exists(_.getName.endsWith(".parquet")),
+      "no flat data files at the table root")
+
+    // the rewritten table is still a valid upsert target: c1 was deleted so
+    // it inserts again, c3 survived so it conflict-skips
+    val r = GoldWriter.upsertBucketed(spark,
+      Seq(("c1", -1), ("c3", -3)).toDF("crash_record_id", "v"), dir, buckets = 8)
+    assert(r.insertedRows == 1 && r.totalRows == 199 && r.duplicateKeys == 0, s"$r")
   }
 }

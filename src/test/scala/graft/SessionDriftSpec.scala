@@ -10,13 +10,17 @@ import scala.jdk.CollectionConverters._
   * session builder or a `.config("spark.…")` call elsewhere is how the
   * per-main copies of the configuration drifted apart before.
   * GraftExtensionsSpec keeps its own builder because the extension install
-  * path is what it tests; it sets no engine setting.
+  * path is what it tests; it sets no engine setting. Likewise the
+  * plain-file commit steps (exclusive create, the rename-aside swap's
+  * backup) live only in [[graft.ops.FsCommit]].
   */
 class SessionDriftSpec extends AnyFunSuite {
 
   // built from parts so this file does not match its own patterns
   private val builder = ("SparkSession" + """\s*\.\s*builder""").r
   private val sparkConfig = ("""\.config\s*\(\s*"""" + """spark\.""").r
+  private val createNew = ("CREATE" + "_NEW").r
+  private val backupSuffix = ("compact" + "_old").r
 
   private def sources(root: String): Seq[Path] =
     Files.walk(Paths.get(root)).iterator().asScala
@@ -34,6 +38,8 @@ class SessionDriftSpec extends AnyFunSuite {
   test("the patterns match the one place they are allowed") {
     val gs = Files.readString(Paths.get("src/main/scala/graft/GraftSession.scala"))
     assert(builder.findFirstIn(gs).isDefined && sparkConfig.findFirstIn(gs).isDefined)
+    val fc = Files.readString(Paths.get("src/main/scala/graft/ops/FsCommit.scala"))
+    assert(createNew.findFirstIn(fc).isDefined && backupSuffix.findFirstIn(fc).isDefined)
   }
 
   test("SparkSession builders: only GraftSession (main) and GraftExtensionsSpec (test)") {
@@ -43,5 +49,13 @@ class SessionDriftSpec extends AnyFunSuite {
 
   test("engine settings under src/main: only GraftSession") {
     assert(offenders("src/main/scala", sparkConfig, "GraftSession.scala").isEmpty)
+  }
+
+  test("exclusive create (CREATE_NEW) under src/main: only FsCommit") {
+    assert(offenders("src/main/scala", createNew, "FsCommit.scala").isEmpty)
+  }
+
+  test("the swap backup suffix under src/main: only FsCommit") {
+    assert(offenders("src/main/scala", backupSuffix, "FsCommit.scala").isEmpty)
   }
 }
